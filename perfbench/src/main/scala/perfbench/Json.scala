@@ -1,0 +1,35 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's records. Strings are escaped
+  * (quote, backslash and every control character), so a query name or
+  * an error message can never make a record unparseable. Maps keep
+  * their iteration order; use a `ListMap` for a stable field order. */
+object Json {
+  def str(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] =>
+      m.map { case (k, x) => str(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+}
