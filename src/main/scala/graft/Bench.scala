@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is recorded with err:1 and
@@ -12,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * figure that filters one-shot contention noise out of the record (a
   * query whose runs disagree by multiples was preempted, not
   * regressed). A rerun that fails falls back to the cold figure rather
-  * than reporting its time-to-failure as a timing.
+  * than reporting its time-to-failure as a timing. A query that fails
+  * its cold run prints `{"metric":"query","name":…,"err":1,"cold":s}`,
+  * where `cold` is its time-to-failure, not a timing.
   *
   * `queries_full`/`total_full` time ONE extra run per query against the
   * noop sink (full materialization of every output row and column).
@@ -28,8 +29,8 @@ object Bench {
     * /proc/loadavg — recorded at run start and end so a phantom
     * regression (a query 2-3× slower with an unchanged plan) can be
     * adjudicated from the artifact itself instead of costing a
-    * dedicated TimeOne rerun: load ≫ 32 on this local[32] box means
-    * the round's bench shared the machine with another tenant. */
+    * dedicated rerun: load ≫ the core count means the round's bench
+    * shared the machine with another tenant. */
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split("\\s+").take(4).mkString(" ")
@@ -38,75 +39,50 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // SPARK_GRAFT_RECYCLE=N restarts the SparkSession every N queries —
-    // OFF by default here (restart cost would smear into cold timings
-    // and break round-over-round comparability at sandbox scale), ON
-    // for heavy-SF batteries where accumulated localCheckpoint blocks
-    // wedge a long session (the r13 sf3 finding; graft.Verify defaults
-    // it to 40).
-    val recycleEvery = sys.env.getOrElse("SPARK_GRAFT_RECYCLE", "0").toInt
-    var spark = Sessions.local(cpus, "graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
+    // optional query-name filter for local profiling
+    val named = Battery.select(args)
+    // Recycling is OFF by default here: restart cost would smear into
+    // cold timings and break round-over-round comparability.
+    val battery = new Battery("graft-bench", Battery.recycleEvery(0))
     // warm up the session (parquet footers, codegen compiler, shuffle
     // machinery) so the first timed query doesn't absorb JVM init.
     // ModelMap.ensure is the reference's BuildAndSaveModels contract: the
     // per-domain model store is built ahead of the streaming scorer, so a
     // cold or invalidated model cache must pre-pay its one-time training
     // here, never inside q_stream_pipe's timing.
-    val only = args.toSet // optional query-name filter for local profiling
-    require((only -- SparkEntry.queries.keySet).isEmpty,
-      s"unknown query name(s): ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
+    val warmup = battery.spark
     try {
       Seq("lineitem", "orders", "part", "customer", "events", "documents", "embeddings")
-        .foreach(t => try sources.Tables.table(spark, sfDir, t).limit(1).count()
+        .foreach(t => try sources.Tables.table(warmup, sfDir, t).limit(1).count()
           catch { case _: Throwable => () })
-      SparkEntry.entry(spark).limit(1).count()
+      SparkEntry.entry(warmup).limit(1).count()
     } catch { case _: Throwable => () }
     // only the streaming scorer consumes the model store — skip its
     // (possibly multi-second) build when a filter excludes it
-    if (only.isEmpty || only("q_stream_pipe"))
-      try ml.ModelMap.ensure(spark, sfDir)
+    if (named.exists(_._1 == "q_stream_pipe"))
+      try ml.ModelMap.ensure(warmup, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] model-map warmup failed: ${e.getMessage}")
       }
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        act: org.apache.spark.sql.DataFrame => Unit = _.count(): Unit)
-        : (Double, Boolean) = {
+    def timeOne(name: String, run: => Unit): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        try { act(fn(spark, sfDir)); true }
+        try { run; true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    var sinceRecycle = 0
     val results = named.map { case (name, fn) =>
-      // hygiene BETWEEN queries, never between a query's own runs:
-      // drop the previous query's localCheckpoint blocks (untimed —
-      // they are its private intermediates, not shared state), and
-      // recycle the session on the configured cadence
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      } catch { case _: Throwable => () }
-      if (recycleEvery > 0 && sinceRecycle >= recycleEvery) {
-        spark.stop()
-        spark = Sessions.local(cpus, "graft-bench")
-        spark.sparkContext.setLogLevel("WARN")
-        sinceRecycle = 0
-      }
-      sinceRecycle += 1
-      val (cold, ok) = timeOne(name, fn)
+      val spark = battery.next()
+      val (cold, ok) = timeOne(name, fn(spark, sfDir).count())
       // warm figure = best of the reruns; a rerun that fails must not
       // pass its time-to-failure off as a stable timing — fall back to
       // the cold figure (the conservative choice) and say so
-      val reruns = if (ok) (2 to runs).map(_ => timeOne(name, fn)) else Seq.empty
+      val reruns =
+        if (ok) (2 to runs).map(_ => timeOne(name, fn(spark, sfDir).count()))
+        else Seq.empty
       val okReruns = reruns.collect { case (t, true) => t }
       if (reruns.nonEmpty && okReruns.isEmpty)
         System.err.println(s"[bench] $name: all warm reruns failed; queries_warm reuses cold")
@@ -118,7 +94,8 @@ object Bench {
       // ~190× optimistic — so the query is dropped from queries_full
       // and named in full_err instead.
       val (full, fullOk) =
-        if (ok) timeOne(name, fn, _.write.mode("overwrite").format("noop").save())
+        if (ok) timeOne(name,
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save())
         else (cold, false)
       if (ok && !fullOk)
         System.err.println(s"[bench] $name: full-materialization run failed; dropped from queries_full")
@@ -128,11 +105,11 @@ object Bench {
     // separately in "err" and excluded from the totals.
     def obj(pick: ((String, Double, Double, Double, Boolean, Boolean)) => Option[Double]): String =
       results.flatMap { case r @ (k, _, _, _, _, _) =>
-        pick(r).map(v => "\"" + k + "\":" + v)
+        pick(r).map(v => Battery.json(k) + ":" + v)
       }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, _, false, _) => "\"" + k + "\"" }
+    val errs = results.collect { case (k, _, _, _, false, _) => Battery.json(k) }
       .mkString("[", ",", "]")
-    val fullErrs = results.collect { case (k, _, _, _, true, false) => "\"" + k + "\"" }
+    val fullErrs = results.collect { case (k, _, _, _, true, false) => Battery.json(k) }
       .mkString("[", ",", "]")
     val total = results.filter(_._5).map(_._2).sum
     val totalWarm = results.filter(_._5).map(_._3).sum
@@ -142,7 +119,7 @@ object Bench {
       s""","queries_warm":${obj(r => if (r._5) Some(r._3) else None)},"total_full":$totalFull""" +
       s""","queries_full":${obj(r => if (r._6) Some(r._4) else None)},"full_err":$fullErrs""" +
       s""","loadavg_start":"$loadStart","loadavg_end":"${loadavg()}"""" +
-      s""","sf":"$sfDir"}"""
+      s""","sf":${Battery.json(sfDir)}}"""
     println(json)
     // Sidecar: the driver's artifact captures a fixed-size TAIL of
     // stdout, so per-query history for early (alphabetical) queries is
@@ -153,7 +130,7 @@ object Bench {
     // round can still read after the slot is overwritten. Catch
     // NonFatal only: an OutOfMemoryError here means the run is
     // fundamentally broken and must not report success.
-    if (only.isEmpty) {
+    if (args.isEmpty) {
       val slot = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
       val stamp = java.time.format.DateTimeFormatter
         .ofPattern("yyyyMMdd_HHmmss")
@@ -171,11 +148,12 @@ object Bench {
     // per-query comparison was judged blind). Additions only — the map
     // line, total_summary and the sidecar are unchanged; a line-level
     // consumer can stream-parse these without holding the map line.
+    // On an err line, `cold` is the time-to-failure.
     results.foreach { case (name, cold, warm, full, ok, fullOk) =>
       if (ok) {
         val fullPart = if (fullOk) s""","full":$full""" else ""
-        println(s"""{"metric":"query","name":"$name","cold":$cold,"warm":$warm$fullPart}""")
-      } else println(s"""{"metric":"query","name":"$name","err":1}""")
+        println(s"""{"metric":"query","name":${Battery.json(name)},"cold":$cold,"warm":$warm$fullPart}""")
+      } else println(s"""{"metric":"query","name":${Battery.json(name)},"err":1,"cold":$cold}""")
     }
     // The per-query line above grows with the suite (185+ queries × 3
     // metrics) and any fixed-size tail capture of this process's stdout
@@ -184,7 +162,7 @@ object Bench {
     println(s"""{"metric":"total_summary","value":$total,"unit":"sec","cold":$total""" +
       s""","warm":$totalWarm,"full":$totalFull,"n":${results.size}""" +
       s""","err_count":${results.count(!_._5)}""" +
-      s""","loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","sf":"$sfDir"}""")
-    spark.stop()
+      s""","loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","sf":${Battery.json(sfDir)}}""")
+    battery.stop()
   }
 }

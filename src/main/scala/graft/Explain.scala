@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-audit main: prints `explain("formatted")` for the named queries
-  * (or a default headline set) so broadcast/pushdown/codegen can be
-  * inspected per operator:
+  * (or a default headline set), planned on the same session config
+  * Bench and Verify run, so broadcast/pushdown/codegen can be inspected
+  * per operator:
   *
   *   sbt "runMain graft.Explain [sfDir] [query ...]"
   *
@@ -19,21 +20,12 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "q_join_enrich", "q_dom_analysis", "q_dedup_minhash",
         "q_ann_cosine", "q_price_candidates", "q_tfidf_topk", "q_hotspots")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      SparkEntry.queries.get(n) match {
-        case Some(fn) =>
-          println(s"\n========== $n ==========")
-          println(fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        case None => println(s"unknown query: $n")
-      }
+    val named = Battery.select(names)
+    val battery = new Battery("graft-explain", recycleEvery = 0)
+    named.foreach { case (n, fn) =>
+      println(s"\n========== $n ==========")
+      println(fn(battery.next(), sfDir).queryExecution.explainString(FormattedMode))
     }
-    spark.stop()
+    battery.stop()
   }
 }

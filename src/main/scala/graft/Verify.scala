@@ -1,69 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
+  * output dir is deleted before it runs, so a query that fails leaves no
+  * stale result behind to pass the compare; the run exits 1 if any query
+  * failed, after oracle_sql.json is written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet // optional query-name filter
-    // a typo'd name silently matching nothing + a reused outDir would
-    // let stale results masquerade as a fresh PASS — fail loudly instead
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // Long batteries accumulate localCheckpoint blocks across queries
-    // (each query's checkpoints are correct for its own latency, but a
-    // 300-query session hoards them until the store wedges — the r13
-    // sf3 finding: query 14 of a heavy 15-query run stalled on
-    // checkpoint writes a fresh JVM absorbed in minutes). Two-level
-    // hygiene: drop persisted blocks after EVERY query, and recycle
-    // the whole SparkSession every SPARK_GRAFT_RECYCLE queries
-    // (default 40; 0 disables) so executor/driver heaps, shuffle
-    // dirs, and the block manager restart from zero ~8 times per
-    // full battery at a cost of ~1-2 s each.
-    val recycleEvery = sys.env.getOrElse("SPARK_GRAFT_RECYCLE", "40").toInt
-    var spark = Sessions.local(cpus, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
+    val named = Battery.select(args.drop(2)) // optional query-name filter
+    // recycled every 40 queries by default: ~8 restarts per full battery
+    val battery = new Battery("graft-verify", Battery.recycleEvery(40))
     new java.io.File(outDir).mkdirs()
-    var sinceRecycle = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val failed = named.filterNot { case (name, fn) =>
+      val spark = battery.next()
+      val out = s"$outDir/$name"
+      FileUtils.deleteDirectory(new java.io.File(out))
+      val t0 = System.nanoTime()
+      try { fn(spark, sfDir).coalesce(1).write.parquet(out); true }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val s = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[verify] $name failed after $s%.3f s: ${e.getMessage}")
+        false
       }
-      // release this query's localCheckpoint blocks + cached plans
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      } catch { case _: Throwable => () }
-      sinceRecycle += 1
-      if (recycleEvery > 0 && sinceRecycle >= recycleEvery) {
-        spark.stop()
-        spark = Sessions.local(cpus, "graft-verify")
-        spark.sparkContext.setLogLevel("WARN")
-        sinceRecycle = 0
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    }.map(_._1)
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Battery.json(k)}: ${Battery.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    battery.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

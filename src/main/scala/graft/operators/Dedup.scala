@@ -387,19 +387,44 @@ object Dedup {
     * near-dup subgraph, orders of magnitude smaller than the corpus —
     * and no component is ever collected; singleton docs never enter
     * the loop and rejoin at the end as their own clusters. */
-  def dedupClusters(spark: SparkSession, dir: String, maxIter: Int = 30): DataFrame = {
-    val labels = componentLabels(minhashPairs(spark, dir).select("id_a", "id_b"), maxIter)
-    val lab = Tables.documents(spark, dir)
-      .select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
-    val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    lab
-      .join(sizes, Seq("cluster_id"))
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("doc_id")
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    canonicalClusters(Tables.documents(spark, dir).select("doc_id"), "doc_id",
+      minhashPairs(spark, dir).select("id_a", "id_b"))
+
+  /** Round cap of the [[componentLabels]] loop; the unrolled DuckDB
+    * oracles run exactly this many rounds, so both states match at the
+    * cap whether or not the propagation has converged. */
+  private[graft] val CcMaxIter = 30
+
+  /** The label → size → canonical-flag tail shared by q_dedup_clusters
+    * and the embedding component queries: one row per node with its
+    * cluster id, cluster size, and whether it is the cluster's minimum
+    * (its canonical keeper), ordered by node id. */
+  private[graft] def canonicalClusters(nodes: DataFrame, id: String,
+      pairs: DataFrame): DataFrame =
+    withClusterSizes(clusterIds(nodes, id, pairs))
+      .select(col(id), col("cluster_id"), col("cluster_size"),
+        (col(id) === col("cluster_id")).as("is_canonical"))
+      .orderBy(id)
+
+  /** Every row of `nodes` labelled with its connected component over
+    * `pairs`: `cluster_id` is the component's minimum id, and a node in
+    * no pair is a singleton labelling itself. Output columns: `id`,
+    * `cluster_id`, then the other columns of `nodes` (which must not
+    * carry a column named `label`). */
+  private[graft] def clusterIds(nodes: DataFrame, id: String,
+      pairs: DataFrame): DataFrame = {
+    val labels = componentLabels(pairs)
+    nodes
+      .join(labels.withColumnRenamed("id", id), Seq(id), "left")
+      .select(col(id) +: coalesce(col("label"), col(id)).as("cluster_id") +:
+        nodes.columns.filterNot(_ == id).map(col).toSeq: _*)
   }
+
+  /** `cluster_size` joined onto [[clusterIds]]' rows. */
+  private[graft] def withClusterSizes(lab: DataFrame): DataFrame =
+    lab.join(lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size")),
+      Seq("cluster_id"))
 
   /** The shared Pregel-style CC loop behind [[dedupClusters]] and
     * Similarity.knnComponents: min-label propagation + pointer jumping
@@ -415,7 +440,7 @@ object Dedup {
     * convergence aggregate (the label sum strictly decreases until
     * fixpoint, so no per-row change tracking); `localCheckpoint`
     * truncates lineage so round N never replays rounds 1..N-1. */
-  private[graft] def componentLabels(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+  private[graft] def componentLabels(pairs: DataFrame): DataFrame = {
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .toDF("src", "dst")
@@ -427,7 +452,7 @@ object Dedup {
       var prevSum = BigDecimal(-1)
       var converged = false
       var i = 0
-      while (!converged && i < maxIter) {
+      while (!converged && i < CcMaxIter) {
         val nbrMin = edges
           .join(labels.select(col("id").as("dst"), col("label").as("nl")), Seq("dst"))
           .groupBy(col("src").as("id"))

@@ -317,8 +317,8 @@ object Similarity {
   @volatile private[graft] var ForestSliceThreshold: Double = 8e6
 
   /** Measured (directed candidates, build wall s, score wall s) for
-    * THIS corpus — the graft.ForestCost harness probe behind the r13
-    * verdict's exponent-methodology item: the candidate BUILD
+    * THIS corpus — ApproxSubstrateSpec's per-candidate cost check, the
+    * r13 verdict's exponent-methodology item: the candidate BUILD
     * (probe join + canonical dedup) times separately from the
     * vector-attach SCORING stage, so scale-rung comparisons can state
     * the scoring exponent against measured CANDIDATES, not rows — the
@@ -496,19 +496,9 @@ object Similarity {
     * component queries: label every embedding (singletons label
     * themselves), count members, flag the minimum as canonical. */
   private def componentsOutput(spark: SparkSession, dir: String,
-      edges: DataFrame): DataFrame = {
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
-    val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    lab
-      .join(sizes, Seq("cluster_id"))
-      .select(col("vec_id"), col("cluster_id"), col("cluster_size"),
-        (col("vec_id") === col("cluster_id")).as("is_canonical"))
-      .orderBy("vec_id")
-  }
+      edges: DataFrame): DataFrame =
+    Dedup.canonicalClusters(Tables.embeddings(spark, dir).select("vec_id"),
+      "vec_id", edges)
 
   /** q_knn_components_approx: semantic clusters over the FOREST-fed
     * mutual graph ([[knnGraphApprox]]'s edge set) — the complete
@@ -549,11 +539,8 @@ object Similarity {
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
     val edges = knnMutual(spark, dir, SampleKnnK)
       .select("id_a", "id_b").localCheckpoint()
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
+    val lab = Dedup.clusterIds(Tables.embeddings(spark, dir).select("vec_id"),
+      "vec_id", edges)
     val mTot = edges.agg(count(lit(1)).as("m"))
     val deg = edges.select(col("id_a").as("vec_id"))
       .union(edges.select(col("id_b").as("vec_id")))
@@ -594,11 +581,8 @@ object Similarity {
     * window over cluster-count-sized rows. */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val edges = knnMutual(spark, dir, SampleKnnK).select("id_a", "id_b")
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").cast("long").as("y"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(coalesce(col("label"), col("vec_id")).as("cluster_id"), col("y"))
+    val lab = Dedup.clusterIds(Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("label").cast("long").as("y")), "vec_id", edges)
     val counts = lab.groupBy("cluster_id", "y").agg(count(lit(1)).as("n_y"))
     val w = Window.partitionBy("cluster_id")
       .orderBy(col("n_y").desc, col("y").asc)
@@ -656,14 +640,9 @@ object Similarity {
     * and forest-fed diversity samplers. */
   private def clusterSampleFrom(spark: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
-    val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-    val draws = lab
-      .join(sizes, Seq("cluster_id"))
+    val lab = Dedup.clusterIds(Tables.embeddings(spark, dir).select("vec_id"),
+      "vec_id", edges)
+    val draws = Dedup.withClusterSizes(lab)
       .withColumn("budget",
         ceil(sqrt(col("cluster_size").cast("double"))).cast("long"))
       .withColumn("draw", expr(
@@ -787,11 +766,7 @@ object Similarity {
       .select(col("vec_id"), expr(
         "transform(cast(embedding as array<double>), x -> cast(floor(x * 1e6 + 0.5) as bigint))")
         .as("ve"))
-    val labels = Dedup.componentLabels(edges)
-    val mem = emb
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("label"), col("vec_id")).as("cluster_id"), col("ve"))
+    val mem = Dedup.clusterIds(emb, "vec_id", edges)
       .localCheckpoint() // catalog-bounded; centroid agg + cos join read it
     val cent = mem
       .select(col("cluster_id"), posexplode(col("ve")).as(Seq("dim", "v")))
@@ -2751,12 +2726,12 @@ object Similarity {
     * the oracle exhausted the sandbox's spill disk. Each round here
     * is (neighbor-min over the edge list) then (label := label of
     * label) — ROUND-FOR-ROUND the Dedup.componentLabels iteration, and
-    * [[CcRounds]] = its maxIter, so the two states are identical at
+    * [[CcRounds]] = its round cap, so the two states are identical at
     * the cap whether or not the propagation has converged (when Spark
     * converges early, the oracle's extra rounds are no-ops on the
     * fixpoint). Cost per round ∝ nodes + edges — linear, like the
     * engine. */
-  private val CcRounds = 30 // = Dedup.componentLabels maxIter — keep in sync
+  private val CcRounds = Dedup.CcMaxIter
 
   /** The unrolled rounds over an `<edgesName>(src, dst)` CTE, ending
     * in lab(vec_id, cluster_id) — shared by [[ccLabSql]] and the

@@ -72,7 +72,7 @@ object StreamingQueries {
 
   /** Run `df` through a memory sink synchronously; return the result.
     * Sinks from previous invocations are dropped first so repeated runs
-    * (warmup + timed, TimeOne repeats) don't accumulate result sets in
+    * (Bench's cold, warm and full runs) don't accumulate result sets in
     * driver memory. */
   private def runToMemory(spark: SparkSession, df: DataFrame,
       mode: OutputMode): DataFrame = {

@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
 Reads each parquet result written by graft.Verify under <outDir>/<name>,
 runs the matching SQL from <outDir>/oracle_sql.json in DuckDB with views
 over <sfDir>'s tables, sorts columns by name + rows by all columns, and
-compares cell-wise (exact for non-floats, atol=1e-9 for floats).
+compares cell-wise (exact for non-floats, atol=1e-9 for floats). A query
+named on the command line that has no result directory is a FAIL.
 """
 import sys, json, os, math, time
 import resource
@@ -198,6 +199,11 @@ def main():
             try: os.unlink(exp_path)
             except OSError: pass
 
+    # a named query that left no result (its Verify run threw, or the
+    # name is mistyped) must not read as a clean run
+    for name in sorted(only - set(results)):
+        print(f"FAIL {name}: no result directory under {outdir}")
+        nfail += 1
     for name in results:
         if only and name not in only:
             continue
